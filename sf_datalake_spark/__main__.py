@@ -16,6 +16,16 @@ The train pipeline: load → optional sample → date filter → target label
 predict → metrics + F-beta thresholds → alert documents + predictions
 written; the merged config is dumped next to outputs for
 reproducibility (reference dumps run config to HDFS).
+
+Both lifecycle commands overlap the Spark actions that do not depend on
+each other (see ``_concurrently``): ``train`` pins the scored test
+split once, then computes the AUC metrics and F-beta thresholds while it
+writes the predictions, the config dump and both fitted models, and
+last writes the alert JSON and the thresholds together; ``predict``
+loads the input, the preprocessing pipeline, the classifier and the
+thresholds at once, then writes the predictions and the alert JSON
+together.  Every command runs in the caller's active session as it is
+(no conf or app-name change) and builds one only when none exists.
 """
 
 from __future__ import annotations
@@ -23,6 +33,34 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+
+def _session(app_name: str):
+    """The caller's active session, untouched; a new engine session
+    only when none is active."""
+    from pyspark.sql import SparkSession
+
+    from sf_datalake_spark.session import get_spark_session
+
+    return SparkSession.getActiveSession() or get_spark_session(app_name)
+
+
+def _concurrently(spark, *thunks):
+    """Run independent Spark actions at once; return their results in
+    argument order.
+
+    One thread per thunk.  Each thread starts with the caller's local
+    properties (job group, description, scheduler pool), so its jobs are
+    traced and cancelled with the caller's.  All thunks finish before
+    the first exception, in argument order, is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+    return [f.result() for f in futures]
 
 
 def _train(args: argparse.Namespace) -> int:
@@ -40,7 +78,6 @@ def _train(args: argparse.Namespace) -> int:
     )
     from sf_datalake_spark.ml.frontend import build_alert_documents
     from sf_datalake_spark.operators.split import hash_split
-    from sf_datalake_spark.session import get_spark_session
     from sf_datalake_spark.transformers import TargetVariable
 
     cli: dict = {}
@@ -52,7 +89,7 @@ def _train(args: argparse.Namespace) -> int:
         cli["sample_ratio"] = args.sample
     cfg = Configuration(config_file=args.config, cli_args=cli)
 
-    spark = get_spark_session("sf_datalake_spark.train")
+    spark = _session("sf_datalake_spark.train")
     df = load_data(spark, cfg.io.dataset_path, args.format)
     if cfg.io.sample_ratio < 1.0:
         df = df.sample(fraction=cfg.io.sample_ratio, seed=cfg.io.random_seed)
@@ -72,6 +109,7 @@ def _train(args: argparse.Namespace) -> int:
             cfg.preprocessing.features_transformers,
             bins=cfg.preprocessing.ordinal_encoding_bins,
             features_col=cfg.learning.features_column,
+            drop_missing=cfg.preprocessing.drop_missing_values,
         )
     )
     prep_model = prep.fit(df)
@@ -85,32 +123,40 @@ def _train(args: argparse.Namespace) -> int:
         **cfg.learning.model_params,
     )
     model = clf.fit(train)
+    # every action below reads the scored test split: score it once
     preds = model.transform(test).withColumn(
         "probability_1", F.element_at(vector_to_array("probability"), 2)
-    )
-
-    metrics = binary_metrics(preds, label_col=label)
-    thresholds = optimal_fbeta_thresholds(
-        preds, score_col="probability_1", label_col=label
-    )
+    ).persist()
     out = cfg.io.output_directory.rstrip("/")
-    write_predictions(
-        preds.select(entity, cfg.preprocessing.identifiers[1], "probability"),
-        f"{out}/predictions",
-    )
-    build_alert_documents(
-        preds, thresholds, entity_col=entity, score_col="probability_1",
-        period_col=cfg.preprocessing.identifiers[1],
-    ).write.mode("overwrite").json(f"{out}/alert_documents")
-    cfg.dump(spark, f"{out}/run_configuration")
-    # Persist the fitted artifacts so `predict` scores with THIS model
-    prep_model.write().overwrite().save(f"{out}/model/preprocessing")
-    model.write().overwrite().save(f"{out}/model/classifier")
-    spark.createDataFrame(
-        [(json.dumps({str(k): v for k, v in thresholds.items()}),)], "t string"
-    ).coalesce(1).write.mode("overwrite").text(f"{out}/model/thresholds")
-    print(json.dumps({"metrics": metrics,
-                      "thresholds": {str(k): v for k, v in thresholds.items()}}))
+    try:
+        metrics, thresholds, *_ = _concurrently(
+            spark,
+            lambda: binary_metrics(preds, label_col=label),
+            lambda: optimal_fbeta_thresholds(
+                preds, score_col="probability_1", label_col=label
+            ),
+            lambda: write_predictions(
+                preds.select(entity, cfg.preprocessing.identifiers[1], "probability"),
+                f"{out}/predictions",
+            ),
+            lambda: cfg.dump(spark, f"{out}/run_configuration"),
+            # the fitted artifacts, so `predict` scores with THIS model
+            lambda: prep_model.write().overwrite().save(f"{out}/model/preprocessing"),
+            lambda: model.write().overwrite().save(f"{out}/model/classifier"),
+        )
+        by_beta = {str(k): v for k, v in thresholds.items()}
+        _concurrently(
+            spark,
+            lambda: build_alert_documents(
+                preds, thresholds, entity_col=entity, score_col="probability_1",
+                period_col=cfg.preprocessing.identifiers[1],
+            ).write.mode("overwrite").json(f"{out}/alert_documents"),
+            lambda: spark.range(1).select(F.lit(json.dumps(by_beta))).coalesce(1)
+            .write.mode("overwrite").text(f"{out}/model/thresholds"),
+        )
+    finally:
+        preds.unpersist()
+    print(json.dumps({"metrics": metrics, "thresholds": by_beta}))
     return 0
 
 
@@ -125,7 +171,6 @@ def _predict(args: argparse.Namespace) -> int:
     from sf_datalake_spark.io import load_data, write_predictions
     from sf_datalake_spark.ml.frontend import build_alert_documents
     from sf_datalake_spark.ml.models import load_classifier
-    from sf_datalake_spark.session import get_spark_session
 
     cli: dict = {}
     if args.dataset:
@@ -135,29 +180,35 @@ def _predict(args: argparse.Namespace) -> int:
     cfg = Configuration(config_file=args.config, cli_args=cli)
     model_dir = (args.model_dir or cfg.io.output_directory).rstrip("/")
 
-    spark = get_spark_session("sf_datalake_spark.predict")
-    df = load_data(spark, cfg.io.dataset_path, args.format)
-    prep = PipelineModel.load(f"{model_dir}/model/preprocessing")
-    clf = load_classifier(cfg.learning.model_name, f"{model_dir}/model/classifier")
-    thresholds = {
-        float(k): v
-        for k, v in json.loads(
-            spark.read.text(f"{model_dir}/model/thresholds").first()["value"]
-        ).items()
-    }
+    spark = _session("sf_datalake_spark.predict")
+
+    def read_thresholds() -> dict:
+        text = spark.read.text(f"{model_dir}/model/thresholds").first()["value"]
+        return {float(k): v for k, v in json.loads(text).items()}
+
+    df, prep, clf, thresholds = _concurrently(
+        spark,
+        lambda: load_data(spark, cfg.io.dataset_path, args.format),
+        lambda: PipelineModel.load(f"{model_dir}/model/preprocessing"),
+        lambda: load_classifier(cfg.learning.model_name, f"{model_dir}/model/classifier"),
+        read_thresholds,
+    )
     preds = clf.transform(prep.transform(df)).withColumn(
         "probability_1", F.element_at(vector_to_array("probability"), 2)
     )
     entity = cfg.preprocessing.identifiers[0]
     out = cfg.io.output_directory.rstrip("/")
-    write_predictions(
-        preds.select(entity, cfg.preprocessing.identifiers[1], "probability"),
-        f"{out}/predictions",
+    _concurrently(
+        spark,
+        lambda: write_predictions(
+            preds.select(entity, cfg.preprocessing.identifiers[1], "probability"),
+            f"{out}/predictions",
+        ),
+        lambda: build_alert_documents(
+            preds, thresholds, entity_col=entity, score_col="probability_1",
+            period_col=cfg.preprocessing.identifiers[1],
+        ).write.mode("overwrite").json(f"{out}/alert_documents"),
     )
-    build_alert_documents(
-        preds, thresholds, entity_col=entity, score_col="probability_1",
-        period_col=cfg.preprocessing.identifiers[1],
-    ).write.mode("overwrite").json(f"{out}/alert_documents")
     print(json.dumps({"thresholds": {str(k): v for k, v in thresholds.items()},
                       "model_dir": model_dir}))
     return 0
@@ -165,9 +216,8 @@ def _predict(args: argparse.Namespace) -> int:
 
 def _convert(args: argparse.Namespace) -> int:
     from sf_datalake_spark.io import csv_to_orc
-    from sf_datalake_spark.session import get_spark_session
 
-    csv_to_orc(get_spark_session("convert"), args.input, args.output, sep=args.sep)
+    csv_to_orc(_session("convert"), args.input, args.output, sep=args.sep)
     return 0
 
 
@@ -175,9 +225,8 @@ def _profile(args: argparse.Namespace) -> int:
     """One-pass data-quality report for any parquet/csv/orc table."""
     from sf_datalake_spark.functions.profile import profile_table
     from sf_datalake_spark.io import load_data
-    from sf_datalake_spark.session import get_spark_session
 
-    spark = get_spark_session("profile")
+    spark = _session("profile")
     df = load_data(spark, args.input, args.format)
     report = profile_table(df)
     if args.output:
@@ -197,9 +246,8 @@ def _dedup(args: argparse.Namespace) -> int:
         lsh_candidate_pairs,
         minhash_signature,
     )
-    from sf_datalake_spark.session import get_spark_session
 
-    spark = get_spark_session("dedup")
+    spark = _session("dedup")
     docs = load_data(spark, args.input, args.format)
     sig = minhash_signature(
         docs, args.id_col, args.text_col,
@@ -249,9 +297,8 @@ def _curate(args: argparse.Namespace) -> int:
         gopher_quality_filter,
         quality_prune,
     )
-    from sf_datalake_spark.session import get_spark_session
 
-    spark = get_spark_session("curate")
+    spark = _session("curate")
     docs = load_data(spark, args.input, args.format)
     n_in = docs.count()
     gated = gopher_quality_filter(
@@ -360,10 +407,9 @@ def _curate(args: argparse.Namespace) -> int:
 
 def _compact(args: argparse.Namespace) -> int:
     from sf_datalake_spark.io import compact_files
-    from sf_datalake_spark.session import get_spark_session
 
     stats = compact_files(
-        get_spark_session("compact"), args.input,
+        _session("compact"), args.input,
         target_mb=args.target_mb, file_format=args.format,
     )
     print(json.dumps(stats))
@@ -372,10 +418,9 @@ def _compact(args: argparse.Namespace) -> int:
 
 def _vacuum(args: argparse.Namespace) -> int:
     from sf_datalake_spark.io import vacuum_staging
-    from sf_datalake_spark.session import get_spark_session
 
     res = vacuum_staging(
-        get_spark_session("vacuum"), args.root,
+        _session("vacuum"), args.root,
         retention_hours=args.retention_hours, dry_run=args.dry_run,
     )
     print(json.dumps(res))
@@ -385,9 +430,8 @@ def _vacuum(args: argparse.Namespace) -> int:
 def _zorder(args: argparse.Namespace) -> int:
     from sf_datalake_spark.functions.zorder import write_zordered
     from sf_datalake_spark.io import load_data
-    from sf_datalake_spark.session import get_spark_session
 
-    spark = get_spark_session("zorder")
+    spark = _session("zorder")
     cols = args.cols.split(",")
     if len(cols) < 2:
         raise SystemExit("--cols takes two or more comma-separated columns")

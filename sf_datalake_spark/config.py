@@ -143,7 +143,10 @@ class Configuration:
 
     def dump(self, spark: SparkSession, path: str) -> None:
         """Persist the merged config next to run outputs (one JSON text
-        row — DataFrame writer, no RDD API)."""
-        spark.createDataFrame(
-            [(json.dumps(self.to_dict(), ensure_ascii=False),)], "config string"
-        ).coalesce(1).write.mode("overwrite").text(path)
+        row — DataFrame writer, no RDD API; a literal over
+        ``spark.range`` so the write starts no Python worker)."""
+        from pyspark.sql import functions as F
+
+        text = json.dumps(self.to_dict(), ensure_ascii=False)
+        row = spark.range(1).select(F.lit(text)).coalesce(1)
+        row.write.mode("overwrite").text(path)

@@ -21,12 +21,23 @@ Input is a plain declarative mapping — no Param-object mutation::
         features_col="features",
     )
     Pipeline(stages=stages).fit(df)
+
+Missing values: with ``drop_missing`` (the default) every
+VectorAssembler is built with ``handleInvalid="skip"``, which is Spark's
+``na.drop(inputCols)`` — the same null/NaN rule the reference's
+MissingValuesDropper stage applies, which this replaces; without it
+the assemblers keep ``"error"`` and fail on a missing value.  Bins are a
+plain Bucketizer.  Every stage is therefore a JVM stage: the fitted
+PipelineModel saves and loads through Spark's Java ML writer/reader and
+never starts a Python worker.  Model directories saved with the older
+Python dropper stage still load (``MissingValuesDropper`` is kept).
 """
 
 from __future__ import annotations
 
 from pyspark.ml import Transformer
 from pyspark.ml.feature import (
+    Bucketizer,
     MaxAbsScaler,
     MinMaxScaler,
     OneHotEncoder,
@@ -35,8 +46,7 @@ from pyspark.ml.feature import (
     VectorAssembler,
 )
 
-from sf_datalake_spark.transformers.core import MissingValuesDropper
-from sf_datalake_spark.transformers.encoders import BinsOrdinalEncoder
+from sf_datalake_spark.transformers.encoders import _to_float
 
 ENCODERS = ("bins", "string_indexer", "onehot")
 SCALERS = ("standard_scaler", "minmax_scaler", "maxabs_scaler")
@@ -82,7 +92,10 @@ def encoding_scaling_stages(
             out = f"{col}_{_SUFFIX[t]}"
             if t == "bins":
                 encoding.append(
-                    BinsOrdinalEncoder(inputCol=col, outputCol=out, bins=bins[feature])
+                    Bucketizer(
+                        splits=[_to_float(b) for b in bins[feature]],
+                        inputCol=col, outputCol=out, handleInvalid="keep",
+                    )
                 )
             elif t == "string_indexer":
                 encoding.append(
@@ -97,22 +110,22 @@ def encoding_scaling_stages(
         else:
             model_features.append(col)
 
+    handle_invalid = "skip" if drop_missing else "error"
     scaling: list[Transformer] = []
     for scaler_name, input_cols in scaler_inputs.items():
-        if drop_missing:
-            scaling.append(MissingValuesDropper(inputCols=input_cols))
         scaling.append(
-            VectorAssembler(inputCols=input_cols, outputCol=f"{scaler_name}_input")
+            VectorAssembler(
+                inputCols=input_cols, outputCol=f"{scaler_name}_input",
+                handleInvalid=handle_invalid,
+            )
         )
         scaling.append(
             _make_scaler(scaler_name, f"{scaler_name}_input", f"{scaler_name}_output")
         )
         model_features.append(f"{scaler_name}_output")
 
-    final: list[Transformer] = []
-    if drop_missing:
-        non_vector = [c for c in model_features if not c.endswith("_output")]
-        if non_vector:
-            final.append(MissingValuesDropper(inputCols=non_vector))
-    final.append(VectorAssembler(inputCols=model_features, outputCol=features_col))
-    return encoding + scaling + final
+    final = VectorAssembler(
+        inputCols=model_features, outputCol=features_col,
+        handleInvalid=handle_invalid,
+    )
+    return encoding + scaling + [final]

@@ -35,6 +35,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _local_frame(spark, rows, ddl: str) -> DataFrame:
+    """A driver-built result (``rows`` of tuples) as a DataFrame of the
+    ``ddl`` schema.
+
+    The rows travel as one Arrow table that the JVM reads whole;
+    ``createDataFrame(list)`` would ship them as a pickled Python RDD,
+    and every later action over the result would start Python workers
+    to unpickle them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_1",
@@ -137,8 +158,8 @@ def _components_driver(directed: DataFrame) -> DataFrame:
             parent[hi] = lo
     out = [(node, find(node)) for node in parent]
     id_type = dict(directed.dtypes)["src"]
-    return directed.sparkSession.createDataFrame(
-        out, f"id {id_type}, component {id_type}"
+    return _local_frame(
+        directed.sparkSession, out, f"id {id_type}, component {id_type}"
     )
 
 
@@ -361,9 +382,8 @@ def pagerank_ppm(
                 rank = {v: 150_000 + (850 * s[v]) // 1_000 for v in ids}
             id_type = dict(directed.dtypes)["src"]
             spark = directed.sparkSession
-            return spark.createDataFrame(
-                [(v, rank[v]) for v in ids],
-                f"id {id_type}, rank_ppm bigint",
+            return _local_frame(
+                spark, [(v, rank[v]) for v in ids], f"id {id_type}, rank_ppm bigint"
             )
         nodes = (
             directed.select(F.col("src").alias("id"))
@@ -421,8 +441,8 @@ def _pagerank_driver(directed: DataFrame, n_iter: int, damping: float) -> DataFr
     n = len(ids)
     if n == 0:
         id_type = dict(directed.dtypes)["src"]
-        return directed.sparkSession.createDataFrame(
-            [], f"id {id_type}, rank double"
+        return _local_frame(
+            directed.sparkSession, [], f"id {id_type}, rank double"
         )
     src_i = np.array([idx[r[0]] for r in rows])
     dst_i = np.array([idx[r[1]] for r in rows])
@@ -434,8 +454,10 @@ def _pagerank_driver(directed: DataFrame, n_iter: int, damping: float) -> DataFr
         np.add.at(contrib, dst_i, rank[src_i] / deg[src_i])
         rank = (1.0 - damping) / n + damping * (contrib + dangling / n)
     id_type = dict(directed.dtypes)["src"]
-    return directed.sparkSession.createDataFrame(
-        [(v, float(rank[idx[v]])) for v in ids], f"id {id_type}, rank double"
+    return _local_frame(
+        directed.sparkSession,
+        [(v, float(rank[idx[v]])) for v in ids],
+        f"id {id_type}, rank double",
     )
 
 
@@ -638,8 +660,12 @@ def k_core(
     # edge source is ALREADY canonical (src < dst) and unique — e.g.
     # ``frequent_pairs`` output, unique by its groupBy(item_1, item_2)
     # construction (same contract as label_propagation_sync's flag;
-    # pinned by tests/test_graph_batch.py).  Duplicate edges with the
-    # flag off would double-count distributed-path degrees.
+    # pinned by tests/test_graph_batch.py).  The flag also skips the
+    # u != v filter, so the source must carry no self-loops either.
+    # With the flag off, duplicate edges double-count distributed-path
+    # degrees, and a self-loop counts its vertex as its own neighbor
+    # (twice on the distributed path, once on the driver path), which
+    # can keep that vertex in the core.
     directed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if dedup_edges:
         directed = (
@@ -685,8 +711,8 @@ def k_core(
             n_alive = n_next
             if n_alive == 0:
                 id_type = dict(directed.dtypes)["u"]
-                return directed.sparkSession.createDataFrame(
-                    [], f"id {id_type}, core_degree int"
+                return _local_frame(
+                    directed.sparkSession, [], f"id {id_type}, core_degree int"
                 )
         raise RuntimeError(
             f"k_core did not converge in {max_iter} rounds; raise max_iter"
@@ -718,8 +744,8 @@ def _k_core_driver(directed: DataFrame, k: int) -> DataFrame:
                 queue.append(m)
     out = [(n, deg[n]) for n in adj if n not in dead]
     id_type = dict(directed.dtypes)["u"]
-    return directed.sparkSession.createDataFrame(
-        out, f"id {id_type}, core_degree int"
+    return _local_frame(
+        directed.sparkSession, out, f"id {id_type}, core_degree int"
     )
 
 
@@ -749,8 +775,9 @@ def core_numbers(
     """
     import math
 
-    # dedup_edges=False: same already-canonical-and-unique caller
-    # contract as k_core above (frequent_pairs-shaped edge sources).
+    # dedup_edges=False: same already-canonical, unique and
+    # self-loop-free caller contract as k_core above
+    # (frequent_pairs-shaped edge sources).
     directed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if dedup_edges:
         directed = (
@@ -844,8 +871,10 @@ def _core_numbers_driver(directed: DataFrame) -> DataFrame:
                 deg[m] = max(deg[m] - 1, k)
                 buckets[deg[m]].add(m)
     id_type = dict(directed.dtypes)["u"]
-    return directed.sparkSession.createDataFrame(
-        [(n, c) for n, c in core.items()], f"id {id_type}, core int"
+    return _local_frame(
+        directed.sparkSession,
+        [(n, c) for n, c in core.items()],
+        f"id {id_type}, core int",
     )
 
 

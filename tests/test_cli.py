@@ -14,7 +14,9 @@ from sf_datalake_spark.__main__ import main
 from tests.conftest import d
 
 
-def test_train_command_end_to_end(spark, tmp_path, capsys):
+def _write_inputs(spark, tmp_path, **config) -> tuple[str, str]:
+    """A 40-firm monthly panel whose failing half decays, and a run
+    config over it; returns (panel path, config path)."""
     rng = np.random.RandomState(0)
     rows = []
     for e in range(40):
@@ -35,9 +37,15 @@ def test_train_command_end_to_end(spark, tmp_path, capsys):
         "model_name": "LogisticRegression",
         "model_params": {"maxIter": 15},
         "features_transformers": {"ca": ["standard_scaler"]},
+        **config,
     }))
+    return panel_path, str(cfg)
+
+
+def test_train_command_end_to_end(spark, tmp_path, capsys):
+    panel_path, cfg = _write_inputs(spark, tmp_path)
     out = str(tmp_path / "run_out")
-    rc = main(["train", "--config", str(cfg), "--dataset", panel_path,
+    rc = main(["train", "--config", cfg, "--dataset", panel_path,
                "--output", out])
     assert rc == 0
 
@@ -67,6 +75,147 @@ def test_train_command_end_to_end(spark, tmp_path, capsys):
     assert preds2.count() > 0
     docs2 = spark.read.json(f"{out2}/alert_documents")
     assert {"siren", "score", "alert"} <= set(docs2.columns)
+
+
+def _python_rdd_stages(spark, job_ids) -> list[int]:
+    """Stages of the given jobs whose RDD graph holds a ``PythonRDD``
+    (a stage that runs Python workers)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+
+    def names(cluster):
+        nodes, subs = cluster.childNodes(), cluster.childClusters()
+        out = [nodes.apply(i).name() for i in range(nodes.size())]
+        for i in range(subs.size()):
+            out += names(subs.apply(i))
+        return out
+
+    stages = {sid for j in job_ids for sid in tracker.getJobInfo(j).stageIds}
+    return sorted(
+        sid for sid in stages
+        if "PythonRDD" in names(store.operationGraphForStage(sid).rootCluster())
+    )
+
+
+@pytest.fixture(scope="module")
+def round_trip(spark, tmp_path_factory):
+    """One train -> predict round trip under its own job group, with the
+    session's conf and persistent RDDs recorded around each command."""
+    tmp = tmp_path_factory.mktemp("round_trip")
+    panel_path, cfg = _write_inputs(spark, tmp)
+    sc = spark.sparkContext
+    rec = {"paths": (panel_path, cfg, str(tmp / "train"), str(tmp / "predict")),
+           "conf": [dict(spark.conf.getAll)],
+           "pinned": [sc._jsc.getPersistentRDDs().size()]}
+    sc.setJobGroup("test_cli.round_trip", "train -> predict")
+    try:
+        for argv in (
+            ["train", "--config", cfg, "--dataset", panel_path,
+             "--output", rec["paths"][2]],
+            ["predict", "--config", cfg, "--dataset", panel_path,
+             "--output", rec["paths"][3], "--model-dir", rec["paths"][2]],
+        ):
+            assert main(argv) == 0
+            rec["conf"].append(dict(spark.conf.getAll))
+            rec["pinned"].append(sc._jsc.getPersistentRDDs().size())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    rec["jobs"] = list(sc.statusTracker().getJobIdsForGroup("test_cli.round_trip"))
+    return rec
+
+
+def test_cli_reuses_active_session_as_is(round_trip):
+    before, after_train, after_predict = round_trip["conf"]
+    assert after_train == before
+    assert after_predict == before
+
+
+def test_round_trip_runs_no_python_worker_and_pins_nothing(spark, round_trip):
+    assert round_trip["jobs"]
+    assert _python_rdd_stages(spark, round_trip["jobs"]) == []
+    before, after_train, after_predict = round_trip["pinned"]
+    assert after_train == before and after_predict == before
+
+
+def test_predict_loads_legacy_dropper_preprocessing(spark, round_trip, tmp_path,
+                                                    capsys):
+    """Model directories saved before the skip-assembler hold a Python
+    MissingValuesDropper stage; predict still scores with them, and
+    scores identically."""
+    import shutil
+
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import StandardScaler, VectorAssembler
+
+    from sf_datalake_spark.transformers import MissingValuesDropper
+
+    panel_path, cfg, train_out, predict_out = round_trip["paths"]
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(train_out, legacy)
+    Pipeline(stages=[
+        MissingValuesDropper(inputCols=["ca"]),
+        VectorAssembler(inputCols=["ca"], outputCol="standard_scaler_input"),
+        StandardScaler(inputCol="standard_scaler_input",
+                       outputCol="standard_scaler_output",
+                       withMean=True, withStd=True),
+        VectorAssembler(inputCols=["standard_scaler_output"], outputCol="features"),
+    ]).fit(spark.read.parquet(panel_path)).write().overwrite().save(
+        f"{legacy}/model/preprocessing"
+    )
+    meta = spark.read.text(f"{legacy}/model/preprocessing/metadata").first()[0]
+    assert json.loads(meta)["paramMap"]["language"] == "Python"
+
+    out = str(tmp_path / "legacy_predict")
+    assert main(["predict", "--config", cfg, "--dataset", panel_path,
+                 "--output", out, "--model-dir", legacy]) == 0
+
+    def scores(path):
+        return sorted(tuple(r) for r in spark.read.parquet(f"{path}/predictions")
+                      .select("siren", "période", "probability").collect())
+
+    assert scores(out) == scores(predict_out)
+
+
+def test_train_wires_drop_missing_values(spark, round_trip, tmp_path, capsys):
+    """``preprocessing.drop_missing_values`` picks the assemblers'
+    handleInvalid: "skip" by default, "error" when false."""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.feature import VectorAssembler
+
+    def modes(train_out):
+        stages = PipelineModel.load(f"{train_out}/model/preprocessing").stages
+        return {st.getHandleInvalid() for st in stages
+                if isinstance(st, VectorAssembler)}
+
+    panel_path, cfg = _write_inputs(spark, tmp_path, drop_missing_values=False)
+    out = str(tmp_path / "out")
+    assert main(["train", "--config", cfg, "--dataset", panel_path,
+                 "--output", out]) == 0
+    assert modes(out) == {"error"}
+    assert modes(round_trip["paths"][2]) == {"skip"}
+
+
+def test_concurrently_keeps_job_group_and_reraises(spark):
+    from sf_datalake_spark.__main__ import _concurrently
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_cli.concurrently", "two counts at once")
+    try:
+        assert _concurrently(
+            spark, lambda: spark.range(10).count(), lambda: spark.range(5).count()
+        ) == [10, 5]
+
+        def boom():
+            raise ValueError("boom")
+
+        with pytest.raises(ValueError, match="boom"):
+            _concurrently(spark, lambda: spark.range(3).count(), boom)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("test_cli.concurrently")) >= 3
 
 
 def test_cli_profile_prints_report(capsys):

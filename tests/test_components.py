@@ -192,3 +192,34 @@ def test_triangle_stats_known_graph(spark):
     assert out[7]["degree"] == 1 and out[7]["clustering"] == 0.0
     # total triangle mass: each triangle counted once per member
     assert sum(r["triangles"] for r in out.values()) == 3 * 4
+
+
+def test_driver_path_results_are_jvm_frames(spark):
+    """Driver-built results keep their DDL schema, stay typed when
+    empty, and are backed by an Arrow relation: no PythonRDD in their
+    lineage, so actions over them start no Python worker."""
+    from pyspark.sql.types import StructType
+
+    from sf_datalake_spark.operators.components import (
+        core_numbers,
+        k_core,
+        pagerank,
+        pagerank_ppm,
+    )
+
+    tri = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "id_1 bigint, id_2 bigint")
+    none = spark.createDataFrame([], "id_1 string, id_2 string")
+    cases = [
+        (connected_components(tri), "id bigint, component bigint", 3),
+        (k_core(tri, 2), "id bigint, core_degree int", 3),
+        (core_numbers(tri), "id bigint, core int", 3),
+        (pagerank(tri), "id bigint, rank double", 3),
+        (pagerank_ppm(tri, "id_1", "id_2"), "id bigint, rank_ppm bigint", 3),
+        (pagerank(none), "id string, rank double", 0),
+        (k_core(none, 2), "id string, core_degree int", 0),
+    ]
+    for df, ddl, n in cases:
+        assert df.schema == StructType.fromDDL(ddl)
+        assert df.count() == n
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, ddl

@@ -296,3 +296,18 @@ def test_k_core_dedup_edges_contract(spark):
     )
     assert deduped == [(1, 2), (2, 2), (3, 2)]
     assert raw != deduped
+
+    # self-loops are not filtered either: each looped vertex is its own
+    # neighbor, so with the flag off the edge 1-2 survives a 2-core it
+    # has no place in — on both paths
+    loop = spark.createDataFrame([(1, 2), (1, 1), (2, 2)], "u bigint, v bigint")
+    for threshold in (0, 1_000_000):
+        deduped = k_core(loop, 2, "u", "v", dedup_edges=True,
+                         driver_threshold=threshold).collect()
+        raw = sorted(
+            tuple(r)
+            for r in k_core(loop, 2, "u", "v", dedup_edges=False,
+                            driver_threshold=threshold).collect()
+        )
+        assert deduped == []
+        assert [n for n, _ in raw] == [1, 2], threshold

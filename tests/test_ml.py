@@ -50,6 +50,91 @@ def test_stage_synthesis_shapes(spark):
     assert any("standard_scaler_output" in n for n in names)
 
 
+def _dropper_chain(stages):
+    """The stage list as it was built before the skip-assembler: a
+    MissingValuesDropper over each assembler's non-vector inputs, then
+    the assembler with the default ``handleInvalid="error"``."""
+    from pyspark.ml.feature import VectorAssembler
+
+    from sf_datalake_spark.transformers import MissingValuesDropper
+
+    out = []
+    for st in stages:
+        if isinstance(st, VectorAssembler):
+            cols = st.getInputCols()
+            out.append(MissingValuesDropper(
+                inputCols=[c for c in cols if not c.endswith("_output")]
+            ))
+            st = VectorAssembler(inputCols=cols, outputCol=st.getOutputCol())
+        out.append(st)
+    return out
+
+
+@pytest.mark.parametrize("features", [
+    {"i": ["standard_scaler"], "x": ["standard_scaler"], "b": []},
+    {"i": [], "x": ["minmax_scaler"], "b": ["maxabs_scaler"]},
+])
+def test_skip_assembler_matches_dropper_chain(spark, features):
+    """handleInvalid="skip" drops exactly the rows the removed dropper
+    stages dropped (null in int/double/boolean, NaN in double) and
+    yields identical features; the fitted stages are all JVM stages."""
+    from pyspark.ml.wrapper import JavaTransformer
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1, 3, 1.0, True), (2, 5, 2.5, False), (3, 9, -1.0, True),
+         (4, None, 4.0, False), (5, 7, None, True), (6, 7, nan, False),
+         (7, 2, 3.0, None), (8, 4, 0.5, False)],
+        "id int, i int, x double, b boolean",
+    )
+    stages = encoding_scaling_stages(features)
+    new = Pipeline(stages=stages).fit(df)
+    old = Pipeline(stages=_dropper_chain(stages)).fit(df)
+
+    def rows(model):
+        return sorted(
+            (r["id"], r["features"].toArray().tolist())
+            for r in model.transform(df).select("id", "features").collect()
+        )
+
+    assert [r[0] for r in rows(new)] == [1, 2, 3, 8]
+    assert rows(new) == rows(old)
+    assert all(isinstance(st, JavaTransformer) for st in new.stages)
+
+
+def test_drop_missing_sets_assembler_handle_invalid(spark):
+    from pyspark.ml.feature import VectorAssembler
+
+    feats = {"ca": ["standard_scaler"], "effectif": ["bins"], "naf": []}
+    bins = {"effectif": ["-inf", 10, "inf"]}
+    for drop, mode in ((True, "skip"), (False, "error")):
+        assemblers = [
+            st for st in encoding_scaling_stages(feats, bins=bins, drop_missing=drop)
+            if isinstance(st, VectorAssembler)
+        ]
+        assert len(assemblers) == 2
+        assert {a.getHandleInvalid() for a in assemblers} == {mode}
+
+
+def test_fitted_preprocessing_is_jvm_only(spark):
+    """Encoders, scalers and assemblers all fit to Java stages, so the
+    PipelineModel saves with Spark's Java ML writer."""
+    from pyspark.ml.util import JavaMLWriter
+    from pyspark.ml.wrapper import JavaTransformer
+
+    df = spark.createDataFrame(
+        [(1.0, 5.0, "A"), (2.0, 30.0, "B"), (3.0, 100.0, "A")],
+        "ca double, effectif double, naf string",
+    )
+    model = Pipeline(stages=encoding_scaling_stages(
+        {"ca": ["standard_scaler"], "effectif": ["bins"],
+         "naf": ["string_indexer", "onehot"]},
+        bins={"effectif": ["-inf", 10.0, 50.0, "inf"]},
+    )).fit(df)
+    assert all(isinstance(st, JavaTransformer) for st in model.stages)
+    assert isinstance(model.write(), JavaMLWriter)
+
+
 def test_make_classifier_factory():
     lr = make_classifier("LogisticRegression", regParam=0.1)
     assert lr.getRegParam() == 0.1
