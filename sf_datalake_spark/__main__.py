@@ -78,6 +78,7 @@ def _train(args: argparse.Namespace) -> int:
     )
     from sf_datalake_spark.ml.frontend import build_alert_documents
     from sf_datalake_spark.operators.split import hash_split
+    from sf_datalake_spark.pins import pinned
     from sf_datalake_spark.transformers import TargetVariable
 
     cli: dict = {}
@@ -123,12 +124,11 @@ def _train(args: argparse.Namespace) -> int:
         **cfg.learning.model_params,
     )
     model = clf.fit(train)
-    # every action below reads the scored test split: score it once
-    preds = model.transform(test).withColumn(
-        "probability_1", F.element_at(vector_to_array("probability"), 2)
-    ).persist()
     out = cfg.io.output_directory.rstrip("/")
-    try:
+    # every action below reads the scored test split: score it once
+    with pinned(model.transform(test).withColumn(
+        "probability_1", F.element_at(vector_to_array("probability"), 2)
+    )) as preds:
         metrics, thresholds, *_ = _concurrently(
             spark,
             lambda: binary_metrics(preds, label_col=label),
@@ -154,8 +154,6 @@ def _train(args: argparse.Namespace) -> int:
             lambda: spark.range(1).select(F.lit(json.dumps(by_beta))).coalesce(1)
             .write.mode("overwrite").text(f"{out}/model/thresholds"),
         )
-    finally:
-        preds.unpersist()
     print(json.dumps({"metrics": metrics, "thresholds": by_beta}))
     return 0
 

@@ -2,8 +2,7 @@
 
 Reference behavior replaced: ``sf_datalake.io`` (reference
 ``src/sf_datalake/io.py:41-191``) — csv/orc load and save, csv→orc
-conversion, and the prediction/explanation writers with fixed output
-parallelism. Here every reader takes an optional explicit ``StructType``
+conversion, and the prediction writer with fixed output parallelism. Here every reader takes an optional explicit ``StructType``
 (inference is opt-in, never the default — at 100 TB a schema-inference
 pass is a full extra scan) and writers expose partitioning knobs instead
 of hard-coding ``repartition(5)`` / ``coalesce(1)``.
@@ -11,24 +10,9 @@ of hard-coding ``repartition(5)`` / ``coalesce(1)``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def load_data(
@@ -187,18 +171,6 @@ def compact_files(
     }
 
 
-def write_explanations(
-    df: DataFrame,
-    path: str,
-    file_format: str = "parquet",
-    num_partitions: int = 1,
-) -> None:
-    """Explanations writer (reference ``io.py:165-191``): persist the
-    micro/macro contribution tables produced by
-    ``ml.explain.linear_contributions`` / ``topic_contributions``."""
-    write_data(df, path, file_format, num_partitions=num_partitions)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -255,22 +227,6 @@ def write_bucketed(
 def csv_to_orc(spark: SparkSession, input_path: str, output_path: str, sep: str = ",") -> None:
     """One-shot csv→orc conversion (reference ``io.py:97-113``)."""
     write_data(load_data(spark, input_path, "csv", sep=sep), output_path, "orc")
-
-
-def load_testdata(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
-) -> dict[str, DataFrame]:
-    """Load the driver-generated TPC-H-ish parquet tables from ``sf_dir``."""
-    return {
-        name: spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        for name in (tables or TESTDATA_TABLES)
-    }
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each testdata table as a temp view for ``spark.sql``."""
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_predictions(

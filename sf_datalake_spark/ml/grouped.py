@@ -334,18 +334,12 @@ def irls_logistic_groups_ppm(
     micro-units (w0 = intercept).
     """
     frag = irls_ppm_fragments(fx1, fx2, reg, div="div")
-    # Persist the 4-int-column design matrix: every Newton round (and
-    # nothing else) re-scans it, so without this the upstream plan —
-    # typically a join tree — re-executes n_iter+1 times (26 s → ~7 s
-    # at sf0.1).  MEMORY_AND_DISK: at cluster scale the matrix is
-    # |rows| × 32 B, the standard cached-training-set shape MLlib's
-    # iterative fitters use; spill is the safety valve, not the plan.
     data = df.select(
         F.col(group_col).alias("grp"),
         F.col(x1q_col).cast("bigint").alias("x1q"),
         F.col(x2q_col).cast("bigint").alias("x2q"),
         F.col(label_col).cast("bigint").alias("y"),
-    ).persist()
+    )
     spark = df.sparkSession
     grp_type = dict(data.dtypes)["grp"]
     coef_schema = (
@@ -357,7 +351,17 @@ def irls_logistic_groups_ppm(
     ]
     global _LAST_IRLS_ROUNDS
     _LAST_IRLS_ROUNDS = 0
-    try:
+    # Cache the 4-int-column design matrix: every Newton round (and
+    # nothing else) re-scans it, so without this the upstream plan —
+    # typically a join tree — re-executes n_iter+1 times (26 s → ~7 s
+    # at sf0.1).  MEMORY_AND_DISK: at cluster scale the matrix is
+    # |rows| × 32 B, the standard cached-training-set shape MLlib's
+    # iterative fitters use; spill is the safety valve, not the plan.
+    from sf_datalake_spark.ml.models import fit_ready
+
+    with fit_ready(
+        data, target_rows_per_partition=250_000, min_partitions=1
+    ) as (data, _):
         # Coefficients live on the DRIVER between rounds (r10, guide
         # §2.4/§5): they are |groups| rows of 4 integers — collecting
         # them costs nothing, and rebuilding each round's input as a
@@ -381,17 +385,6 @@ def irls_logistic_groups_ppm(
         # the floor of 4 keeps the partial aggregation parallel.  At
         # cluster scale a billion-row matrix still gets thousands of
         # partitions — the coalesce is size-derived, not a constant.
-        from sf_datalake_spark.ml.models import fit_ready
-
-        # Keep a handle to the frame fit_ready cached: coalesce(1)
-        # below produces a DIFFERENT plan (Repartition over the cached
-        # scan), and unpersist() on that wrapper does not match the
-        # cache entry — the r10 advice-verified leak.  The finally
-        # must unpersist `cached`, never the coalesced rebind.
-        cached, _ = fit_ready(
-            data, target_rows_per_partition=250_000, min_partitions=1
-        )
-        data = cached
         if data.rdd.getNumPartitions() == 1:
             # Coalesce(1) advertises SinglePartition (a cached scan
             # reports UNKNOWN partitioning even at one partition), and
@@ -467,8 +460,6 @@ def irls_logistic_groups_ppm(
                     break
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    finally:
-        cached.unpersist()
     return spark.createDataFrame(
         coef_rows,
         f"grp {grp_type}, group_n bigint, "

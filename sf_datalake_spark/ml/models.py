@@ -7,6 +7,9 @@ RandomForestClassifier / GBTClassifier with config-driven params).
 
 from __future__ import annotations
 
+import math
+from contextlib import contextmanager
+
 from pyspark.ml.classification import (
     GBTClassifier,
     LogisticRegression,
@@ -37,12 +40,14 @@ def make_classifier(
     return _MODELS[name](featuresCol=features_col, labelCol=label_col, **params)
 
 
+@contextmanager
 def fit_ready(
     df,
     target_rows_per_partition: int = 500_000,
     min_partitions: int = 1,
 ):
-    """Cache and right-size a training DataFrame before ``Estimator.fit``.
+    """Cache and right-size a training DataFrame for the ``with`` block
+    around ``Estimator.fit``.
 
     MLlib's iterative trainers (tree ensembles especially) launch one
     Spark job per iteration over the training input, and the RDD they
@@ -59,23 +64,27 @@ def fit_ready(
     input), and coalesces to ``max(min_partitions,
     ceil(rows / target_rows_per_partition))`` — at 100 TB a billion-row
     training set still gets thousands of partitions, while a post-agg
-    panel slice collapses to a handful.  Returns ``(train_df, row_count)``;
-    call ``train_df.unpersist()`` when done with the fitted model.
-    """
-    import math
+    panel slice collapses to a handful.  Yields ``(train_df, row_count)``
+    and releases the cache when the block exits::
 
+        with fit_ready(assembled) as (train, n):
+            model = clf.fit(train)
+    """
     cached = df.cache()
-    n = cached.count()
-    parts = max(min_partitions, math.ceil(n / max(1, target_rows_per_partition)))
-    if parts >= cached.rdd.getNumPartitions():
-        return cached, n
-    # Cache the coalesced result (cheap: reads the parent cache once),
-    # then drop the parent so the caller holds exactly one persisted
-    # frame and a single unpersist() frees everything.
-    out = cached.coalesce(parts).cache()
-    out.count()
-    cached.unpersist()
-    return out, n
+    train = cached
+    try:
+        n = cached.count()
+        parts = max(min_partitions, math.ceil(n / max(1, target_rows_per_partition)))
+        if parts < cached.rdd.getNumPartitions():
+            # Cache the coalesced result (cheap: reads the parent cache
+            # once), then drop the parent so one pinned frame backs the fit.
+            train = cached.coalesce(parts).cache()
+            train.count()
+            cached.unpersist()
+        yield train, n
+    finally:
+        train.unpersist()
+        cached.unpersist()  # no-op unless the coalesce swap failed midway
 
 
 _MODEL_CLASSES = {

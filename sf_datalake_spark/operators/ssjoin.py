@@ -24,12 +24,10 @@ Scale design (the whole point of prefix filtering):
   surviving candidates — document text never moves.
 
 Correctness of the filter (no false negatives) is property-tested
-against a brute-force all-pairs Jaccard in ``tests/test_ssjoin.py``.
+against a brute-force all-pairs Jaccard in ``tests/test_mining.py``.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -168,39 +166,6 @@ def set_similarity_join(
     return verified.withColumn(
         "jaccard", F.col("inter_size") / F.col("union_size")
     )
-
-
-def brute_force_jaccard_pairs(
-    df: DataFrame, id_col: str, tokens_col: str, threshold: float
-) -> DataFrame:
-    """O(n^2) reference implementation for tests — same output contract."""
-    sets = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.col(tokens_col)).alias("toks"),
-    ).filter(F.size("toks") > 0)
-    a = sets.select(F.col("__id").alias("id_a"), F.col("toks").alias("toks_a"))
-    b = sets.select(F.col("__id").alias("id_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            inter.alias("inter_size"),
-            (F.size("toks_a") + F.size("toks_b") - inter).alias("union_size"),
-        )
-        .filter(
-            F.col("inter_size") * F.lit(1_000_000)
-            >= F.col("union_size") * F.lit(int(round(threshold * 1_000_000)))
-        )
-        .withColumn("jaccard", F.col("inter_size") / F.col("union_size"))
-    )
-
-
-def prefix_length_py(n: int, t: float) -> int:
-    """Driver-side twin of :func:`_prefix_len` for tests/docs."""
-    return n - math.ceil(t * n) + 1
 
 
 def containment_join(

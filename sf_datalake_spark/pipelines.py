@@ -148,19 +148,15 @@ def upsert_monthly_partitions(
 
     The 100 TB maintenance path: a monthly refresh rewrites one month's
     partition, not the table; readers keep pruning on ``period_col``.
+    The mode is a per-write option, so the session conf is untouched.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(period_col)
-            .format(file_format)
-            .save(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(period_col)
+        .format(file_format)
+        .save(path)
+    )
 
 
 def semi_join_filter(

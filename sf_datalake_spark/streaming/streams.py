@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from sf_datalake_spark.pins import pinned
+
 
 @contextlib.contextmanager
 def _pinned_confs(spark: SparkSession, confs: dict[str, str]):
@@ -513,10 +515,9 @@ def run_near_dup_gate(
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, text_col)
-        sig_new = minhash_signature(
+        with pinned(minhash_signature(
             batch, id_col, text_col, num_hashes=num_hashes, shingle_n=3
-        ).persist()
-        try:
+        )) as sig_new:
             if os.path.exists(corpus_path):
                 sig_base = spark.read.parquet(corpus_path)
                 matches = lsh_pairs_against(
@@ -552,8 +553,6 @@ def run_near_dup_gate(
             appended.write.mode("overwrite").parquet(staging)
             shutil.rmtree(corpus_path, ignore_errors=True)
             os.replace(staging, corpus_path)
-        finally:
-            sig_new.unpersist()
 
     with _state_partitions(stream.sparkSession, state_partitions):
         q = (
@@ -661,12 +660,9 @@ def run_bloom_gate(
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, F.md5(F.col(text_col)).alias("fp"))
         # within-batch exact dedup: earliest id per fingerprint wins
-        batch = (
-            batch.groupBy("fp")
-            .agg(F.min(id_col).alias(id_col))
-            .persist()
-        )
-        try:
+        with pinned(
+            batch.groupBy("fp").agg(F.min(id_col).alias(id_col))
+        ) as batch:
             if os.path.exists(sketch_path):
                 sketch = spark.read.parquet(sketch_path)
                 gated = bloom_maybe_contains(
@@ -699,8 +695,6 @@ def run_bloom_gate(
             for staging, path in stagings:
                 shutil.rmtree(path, ignore_errors=True)
                 os.replace(staging, path)
-        finally:
-            batch.unpersist()
 
     with _state_partitions(stream.sparkSession, state_partitions):
         q = (

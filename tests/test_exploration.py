@@ -109,6 +109,36 @@ def test_one_way_anova_always_emits_p_value(spark):
 
 
 # ---------------------------------------------------------------------------
+# quantile_summary keeps every (column, quantile) row, as F.percentile did
+# ---------------------------------------------------------------------------
+
+def _percentile_rows(df, cols, qs):
+    from pyspark.sql import functions as F
+
+    ref = df.select(*[F.percentile(c, list(qs)).alias(c) for c in cols]).first()
+    return {
+        (c, q): (ref[c][i] if ref[c] is not None else None)
+        for c in cols for i, q in enumerate(qs)
+    }
+
+
+def test_quantile_summary_all_null_column_and_empty_input(spark):
+    from sf_datalake_spark.ml.exploration import quantile_summary
+
+    qs = (0.05, 0.5, 0.95)
+    df = spark.createDataFrame(
+        [(1.0, None), (4.0, None), (2.5, None), (None, None), (7.0, None)],
+        "x double, z double",
+    )
+    for frame in (df, df.limit(0)):
+        rows = quantile_summary(frame, ["x", "z"], qs).collect()
+        got = {(r["column"], r["quantile"]): r["value"] for r in rows}
+        assert len(rows) == 6
+        assert got == _percentile_rows(frame, ["x", "z"], qs)
+        assert all(got[("z", q)] is None for q in qs)
+
+
+# ---------------------------------------------------------------------------
 # PCA trajectories: one basis (first period), all periods projected
 # ---------------------------------------------------------------------------
 

@@ -4,25 +4,56 @@
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sf_datalake_spark.operators.scd import scd2_build, scd2_snapshot
 from sf_datalake_spark.operators.skyline import skyline_2d, skyline_nd
-from sf_datalake_spark.operators.ssjoin import (
-    brute_force_jaccard_pairs,
-    prefix_length_py,
-    set_similarity_join,
-)
+from sf_datalake_spark.operators.ssjoin import set_similarity_join
 from sf_datalake_spark.operators.timeseries import autocorrelation
 
 
 # ---------------------------------------------------------------------------
 # set-similarity join
 # ---------------------------------------------------------------------------
+
+def brute_force_jaccard_pairs(
+    df: DataFrame, id_col: str, tokens_col: str, threshold: float
+) -> DataFrame:
+    """O(n^2) oracle for ``set_similarity_join`` — same output contract."""
+    sets = df.select(
+        F.col(id_col).alias("__id"),
+        F.array_distinct(F.col(tokens_col)).alias("toks"),
+    ).filter(F.size("toks") > 0)
+    a = sets.select(F.col("__id").alias("id_a"), F.col("toks").alias("toks_a"))
+    b = sets.select(F.col("__id").alias("id_b"), F.col("toks").alias("toks_b"))
+    inter = F.size(F.array_intersect("toks_a", "toks_b"))
+    return (
+        a.crossJoin(b)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            inter.alias("inter_size"),
+            (F.size("toks_a") + F.size("toks_b") - inter).alias("union_size"),
+        )
+        .filter(
+            F.col("inter_size") * F.lit(1_000_000)
+            >= F.col("union_size") * F.lit(int(round(threshold * 1_000_000)))
+        )
+        .withColumn("jaccard", F.col("inter_size") / F.col("union_size"))
+    )
+
+
+def prefix_length_py(n: int, t: float) -> int:
+    """Driver-side twin of ``ssjoin._prefix_len``."""
+    return n - math.ceil(t * n) + 1
+
 
 def _pairs(df):
     return {

@@ -112,9 +112,12 @@ def test_full_dataset_build_dag(spark, csv_sources, tmp_path):
 
 def test_upsert_monthly_partitions_is_incremental(spark, tmp_path):
     """Dynamic partition overwrite: re-writing one month leaves the
-    others untouched."""
+    others untouched, and the session's overwrite mode is left as it
+    was (the mode is a per-write option)."""
     from pyspark.sql import functions as F
 
+    key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(key, None)
     path = str(tmp_path / "panel_parts")
     base = spark.createDataFrame(
         [("1", d("2023-01-01"), 10.0), ("1", d("2023-02-01"), 20.0)],
@@ -128,6 +131,7 @@ def test_upsert_monthly_partitions_is_incremental(spark, tmp_path):
     upsert_monthly_partitions(feb, path)
     back = {r["période"]: r["ca"] for r in spark.read.parquet(path).collect()}
     assert back == {d("2023-01-01"): 10.0, d("2023-02-01"): 99.0}
+    assert spark.conf.get(key, None) == conf_before
 
 
 def test_char_ngrams_and_mode_imputer(spark):

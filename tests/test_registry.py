@@ -82,19 +82,37 @@ def test_registry_outputs_are_scalar_typed(spark):
     scalar-typed columns: no ArrayType / MapType / StructType anywhere
     in the output schema.  Lazy queries only pay plan analysis here;
     the handful of documented eager (driver-adaptive / collect-inside)
-    queries run at sf0.001, the smallest fixture."""
+    queries run at sf0.001, the smallest fixture.
+
+    The same pass checks that no query leaves a pin behind: a
+    CacheManager entry, or a persistent RDD that is not a local
+    checkpoint (those are freed by the ContextCleaner, not by a scope)."""
     from pyspark.sql import types as T
 
     import __spark_entry__ as entry
 
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+
+    def pins():
+        plain = sum(
+            1 for jrdd in jsc.getPersistentRDDs().values()
+            if not jrdd.rdd().isLocallyCheckpointed()
+        )
+        return cm.numCachedEntries(), plain
+
     sf = "/root/testdata/sf0.001"
-    bad, errs = {}, {}
+    bad, errs, leaks = {}, {}, {}
     for name, fn in entry.queries().items():
+        before = pins()
         try:
             schema = fn(spark, sf).schema
         except Exception as exc:  # noqa: BLE001 — collect all, report once
             errs[name] = repr(exc)[:200]
             continue
+        grown = tuple(a - b for a, b in zip(pins(), before))
+        if max(grown) > 0:
+            leaks[name] = grown
         complex_cols = [
             f.name for f in schema.fields
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
@@ -102,6 +120,10 @@ def test_registry_outputs_are_scalar_typed(spark):
         if complex_cols:
             bad[name] = complex_cols
     assert not errs, f"queries failed during schema build: {errs}"
+    assert not leaks, (
+        "queries left pins behind as (cache entries, persistent RDDs): "
+        f"{leaks}"
+    )
     assert not bad, (
         "non-scalar output columns would reach the driver's pandas "
         f"canonicalizer (unhashable cells): {bad}"
